@@ -41,12 +41,13 @@ object SparkEntry {
     all.toMap
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  /** One entry per implemented operator from SURVEY.md §2. Merged once:
+    * every pack map is a `val`, so the registry never changes. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     merged(packs.map(_.queries))
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
+  lazy val oracleSql: Map[String, String] =
     merged(packs.map(_.oracles))
 }

@@ -1,5 +1,7 @@
 package graft.sources
 
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.{LocatedFileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType, TimestampNTZType, TimestampType}
@@ -11,14 +13,57 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType, Tim
   * program.c:34-43), columnar, splittable — the 100 TB-safe ingestion
   * path. Filters/projections applied downstream reach the scan via
   * Catalyst pushdown; no custom reader code is needed.
+  *
+  * Schema cache: Spark infers a parquet schema with a one-task job
+  * (`SchemaMergeUtils.mergeSchemasInParallel`) on every read that gives
+  * no schema, and every registered query loads its tables afresh. So
+  * [[load]] infers each table's schema once and reads with
+  * `spark.read.schema(cached)` from then on, which starts no job. The
+  * cached schema is exactly the one Spark inferred on the first load.
+  * An entry is valid for one qualified path and one stamp: the name,
+  * length and modification time of every file under the path, plus the
+  * session's parquet-inference settings. A rewritten table changes the
+  * stamp and is inferred again, so no read ever uses a stale schema.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    normalizeNtz(spark.read.parquet(s"$dir/$name.parquet"))
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    normalizeNtz(spark.read.schema(schemaOf(spark, path)).parquet(path))
+  }
+
+  /** Settings that change the schema Spark infers from a parquet footer. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp", "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  /** Qualified path → (stamp, inferred schema); one entry per path. */
+  private val schemas = new ConcurrentHashMap[String, (Seq[Any], StructType)]()
+
+  /** The schema `spark.read.parquet(path)` infers, inferred once per
+    * stamp (see the object doc). */
+  def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val qualified = fs.makeQualified(p)
+    if (!fs.exists(qualified)) return spark.read.parquet(path).schema // Spark's own not-found error
+    val listed = fs.listFiles(qualified, true)
+    val files = new Iterator[LocatedFileStatus] {
+      def hasNext: Boolean = listed.hasNext
+      def next(): LocatedFileStatus = listed.next()
+    }
+    val stamp = files.map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+      .toSeq.sortBy(_._1) ++ inferenceConfs.map(spark.conf.getOption)
+    val key = qualified.toString
+    Option(schemas.get(key)).collect { case (`stamp`, schema) => schema }.getOrElse {
+      val schema = spark.read.parquet(path).schema
+      schemas.put(key, (stamp, schema))
+      schema
+    }
+  }
 
   /** Harness testdata generations differ in parquet timestamp encoding:
     * some write TIMESTAMP with isAdjustedToUTC=true (→ TimestampType),

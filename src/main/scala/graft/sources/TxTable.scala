@@ -841,9 +841,19 @@ object TxTable {
                        files: Iterable[String]): DataFrame = {
     val covering = files.flatMap(dvs.get).map(_.path).toSeq.sorted
     if (covering.isEmpty) df
-    else df.join(s.read.parquet(covering: _*)
-        .select(col(physName(meta, meta.key)).as(meta.key)),
-      Seq(meta.key), "left_anti")
+    else df.join(readDvKeys(s, meta, covering), Seq(meta.key), "left_anti")
+  }
+
+  /** The deleted keys in deletion-vector sidecars, under the LOGICAL
+    * key name. A sidecar holds one column, the PHYSICAL key, whose type
+    * the log already declares: reading with that schema skips Spark's
+    * footer-inference job.
+    */
+  private def readDvKeys(s: SparkSession, meta: TableMeta,
+                         paths: Seq[String]): DataFrame = {
+    val phys = physName(meta, meta.key)
+    s.read.schema(StructType(Seq(physSchema(meta)(phys)))).parquet(paths: _*)
+      .select(col(phys).as(meta.key))
   }
 
   /** Latest committed version (0 = no table) — filename metadata only,
@@ -2065,9 +2075,7 @@ object TxTable {
       val fresh = tagged.join(d, Seq(key), "left_semi")
       val oldTagged = hitSeq.zipWithIndex
         .flatMap { case (f, i) => dvs.get(f).map(e =>
-          s.read.parquet(e.path)
-            .select(col(physName(meta, key)).as(key))
-            .withColumn("__dvi", lit(i))) }
+          readDvKeys(s, meta, Seq(e.path)).withColumn("__dvi", lit(i))) }
         .reduceOption(_ unionAll _)
       val unioned = oldTagged.map(fresh.unionAll).getOrElse(fresh).distinct()
       // ONE write job for every sidecar (partitioned on the touched-file
@@ -2213,8 +2221,7 @@ object TxTable {
     def dvKeys(files: Seq[String], dvs: Map[String, DvEntry]) =
       files.flatMap(dvs.get).map(_.path) match {
         case Seq() => None
-        case ps => Some(s.read.parquet(ps: _*)
-          .select(col(physName(meta, key)).as(key)))
+        case ps => Some(readDvKeys(s, meta, ps))
       }
     def morLeg(changed: Seq[String], gained: Map[String, DvEntry],
                lost: Map[String, DvEntry], changeType: String) =

@@ -43,7 +43,7 @@ object Events {
         if (!Files.exists(link)) Files.createSymbolicLink(link, src)
         stage
       }
-    val schema = s.read.parquet(src.toString).schema
+    val schema = graft.sources.Tables.schemaOf(s, src.toString)
     val raw = s.readStream.schema(schema).parquet(streamDir.toString)
     val withTs =
       if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
